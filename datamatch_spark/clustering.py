@@ -17,12 +17,24 @@
   the sequential highest-score-first greedy is realized as the
   locally-dominant-pair fixpoint, which yields the identical matching
   under a strict total pair order (score DESC, idx_a ASC, idx_b ASC).
+
+Both graph steps use hybrid execution (same spirit as broadcast
+joins) through one route decision, ``_route``: an input that is not
+stored yet is checkpointed, then one bounded Arrow collect of at most
+``threshold + 1`` stored rows picks the route. An input that fits is
+solved in numpy on the driver — CC by min-label propagation, the 1:1
+prune by the same locally-dominant fixpoint — because post-threshold
+pair sets are usually tiny relative to the candidate set. Larger inputs
+run the distributed rounds above on the stored rows, so the input is
+computed once on either route.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,6 +60,45 @@ def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
         .where(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
     )
+
+
+# inputs of at most this many rows are solved on the driver
+_DRIVER_THRESHOLD = 1_000_000
+
+
+def _stored(df: DataFrame) -> bool:
+    """Whether ``df`` only reads rows already held by Spark: deterministic
+    projections over a local relation or a materialized checkpoint (the
+    matcher's scored pairs are one)."""
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        plan = todo.pop()
+        name = plan.getClass().getSimpleName()
+        if not plan.deterministic() or not (
+            name in ("Project", "LocalRelation")
+            or (name == "LogicalRDD" and plan.rdd().isCheckpointed())
+        ):
+            return False
+        children = plan.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return True
+
+
+def _route(df: DataFrame, threshold: int):
+    """The hybrid route decision: ``(stored df, table or None)``.
+
+    An input that is not stored yet is checkpointed first, so the
+    distributed rounds never compute it a second time. The stored rows
+    are then read by one task (``coalesce(1)``: no shuffle, unlike a
+    bare ``limit``'s single-partition exchange), which stops after
+    ``threshold + 1`` rows, as one Arrow collect. The table is returned
+    when ``df`` has at most ``threshold`` rows — solve it on the driver
+    — else ``None`` — run the distributed rounds; above the threshold
+    the collected rows are the route decision's only extra cost."""
+    if not _stored(df):
+        df = df.localCheckpoint(storageLevel=_ckpt_level())
+    tbl = df.coalesce(1).limit(threshold + 1).toArrow()
+    return df, (tbl if tbl.num_rows <= threshold else None)
 
 
 def _large_star(edges: DataFrame, n_parts: int | None = None) -> DataFrame:
@@ -104,7 +155,7 @@ def connected_components(
     src: str = "idx_a",
     dst: str = "idx_b",
     max_iter: int = 50,
-    driver_threshold: int = 1_000_000,
+    driver_threshold: int = _DRIVER_THRESHOLD,
 ) -> DataFrame:
     """Return DataFrame[node, component] for every node incident to an
     edge; ``component`` is the minimum node id of the component.
@@ -119,32 +170,32 @@ def connected_components(
     ``driver_threshold`` counts RAW edge rows (pre-dedup): the driver
     path canonicalizes in numpy, so no Spark-side dedup shuffle or
     signature job runs before the routing decision — the small-graph
-    path is exactly (checkpoint, count, toPandas)."""
-    raw = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(storageLevel=_ckpt_level())
-    n_raw = raw.count()
+    path is one bounded Arrow collect (``_route``), after a checkpoint
+    when ``edges`` is not stored yet."""
+    raw, tbl = _route(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        driver_threshold,
+    )
     spark = edges.sparkSession
-    if n_raw <= driver_threshold:
+    if tbl is not None:
         node_type = raw.schema["u"].dataType
         out_schema = T.StructType(
             [T.StructField("node", node_type), T.StructField("component", node_type)]
         )
-        # Arrow transfer + vectorized min-label propagation: the Row
-        # collect + pure-Python union-find this replaces was ~10x
-        # slower at bench edge counts (every collect()ed Row and every
-        # find() is Python-object work); labels here move through
-        # numpy only. Exotic node types that numpy cannot sort fall
-        # back to the original loop (same output either way: node ->
-        # minimum node id of its component).
+        # numpy canonicalization, matching _canon: drop null endpoints
+        # and self-loops (duplicate edges are harmless to label
+        # propagation and skipped rather than deduped)
+        pdf = tbl.drop_null().to_pandas()
+        ua, va = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        keep = ua != va
+        ua, va = ua[keep], va[keep]
+        # vectorized min-label propagation: the Row collect + pure-Python
+        # union-find this replaces was ~10x slower at bench edge counts
+        # (every Row and every find() is Python-object work); labels
+        # here move through numpy only. Exotic node types that numpy
+        # cannot sort fall back to the original loop (same output either
+        # way: node -> minimum node id of its component).
         try:
-            # numpy canonicalization, matching _canon: drop null
-            # endpoints and self-loops (duplicate edges are harmless
-            # to label propagation and skipped rather than deduped)
-            pdf = raw.toPandas().dropna()
-            ua, va = pdf["u"].to_numpy(), pdf["v"].to_numpy()
-            keep = ua != va
-            ua, va = ua[keep], va[keep]
             uv = np.concatenate([ua, va])
             # np.unique SORTS uniques, so label index order == node
             # value order and the minimum label is the minimum node id
@@ -182,8 +233,6 @@ def connected_components(
             )
             return spark.createDataFrame(out_pdf, schema=out_schema)
         except (TypeError, ValueError):  # pragma: no cover - exotic ids
-            canon = _canon(raw, "u", "v")
-            pairs = [(r["u"], r["v"]) for r in canon.collect()]
             parent: dict = {}
 
             def find(x):
@@ -195,7 +244,7 @@ def connected_components(
                     parent[x], x = root, parent[x]
                 return root
 
-            for u, v in pairs:
+            for u, v in zip(ua.tolist(), va.tolist()):
                 ru, rv = find(u), find(v)
                 if ru != rv:
                     if rv < ru:
@@ -685,6 +734,98 @@ def split_cliques_iterative(
     return complete_out.unionByName(carved)
 
 
+def _rank_codes(col, negate: bool = False) -> np.ndarray:
+    """Dense int codes of an Arrow column in Spark's ascending struct
+    field order: NULL first (code 0), NaN last, -0.0 == 0.0, NaN ==
+    NaN, strings by code point (== Spark's UTF8 binary order)."""
+    vals = col.drop_null()
+    codes = np.zeros(len(col), np.int64)
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    if pa.types.is_string(vals.type) or pa.types.is_large_string(vals.type):
+        # Arrow ranks strings by their UTF-8 bytes (== code point order)
+        # in C++; np.unique would sort Python str objects
+        codes[valid] = pc.rank(vals, tiebreaker="dense").to_numpy()
+        return codes
+    vals = vals.to_numpy(zero_copy_only=False)
+    # np.unique sorts, merges -0.0 with 0.0 and all NaNs into one
+    # trailing value — the order Spark's struct comparison uses
+    _, inv = np.unique(-vals if negate else vals, return_inverse=True)
+    codes[valid] = inv + 1
+    return codes
+
+
+def _group_min_rows(
+    by_key: np.ndarray, key: np.ndarray, rank: np.ndarray
+) -> np.ndarray:
+    """The rows of ``by_key`` (row positions sorted by ``key``) whose
+    rank is the minimum among the rows of ``by_key`` sharing their key."""
+    k = key[by_key]
+    first = np.ones(len(by_key), bool)
+    first[1:] = k[1:] != k[:-1]
+    # per-key min-reduce via the PRECOMPUTED sort + minimum.reduceat,
+    # as in CC's driver path
+    r = rank[by_key]
+    mins = np.minimum.reduceat(r, np.flatnonzero(first))
+    return by_key[r == mins[np.cumsum(first) - 1]]
+
+
+def _greedy_on_driver(tbl, max_iter: int) -> np.ndarray:
+    """Row positions of ``tbl`` the distributed fixpoint keeps, computed
+    round by round in numpy: same rounds, so the same rows (ties and
+    exact duplicates included) and the same ``max_iter`` failure."""
+    cs, ca, cb = (
+        _rank_codes(tbl.column(c).combine_chunks(), negate=c == "sim_score")
+        for c in ("sim_score", "idx_a", "idx_b")
+    )
+    n = len(cs)
+    # dense rank of the struct (-sim_score, idx_a, idx_b): equal rank
+    # <=> equal struct, so per-endpoint minima compare as in Spark
+    order = np.lexsort((cb, ca, cs))
+    keys = np.stack([cs, ca, cb])[:, order]
+    new = np.ones(n, bool)
+    new[1:] = (keys[:, 1:] != keys[:, :-1]).any(axis=0)
+    rank = np.empty(n, np.int64)
+    rank[order] = np.cumsum(new)
+    # the remaining rows, sorted once by each endpoint and filtered
+    # (order kept) as rows drop out
+    by_a = np.argsort(ca, kind="stable")
+    by_b = np.argsort(cb, kind="stable")
+    min_a = np.zeros(n, bool)
+    kept = []
+    for _ in range(max_iter):
+        min_a[:] = False
+        min_a[_group_min_rows(by_a, ca, rank)] = True
+        sel = _group_min_rows(by_b, cb, rank)
+        sel = sel[min_a[sel]]
+        # a NULL endpoint (code 0) is never kept — the fixpoint's inner
+        # joins drop it — but still competes in its other endpoint's
+        # group, so it takes part in the minima
+        sel = sel[(ca[sel] > 0) & (cb[sel] > 0)]
+        if not len(sel):
+            break
+        kept.append(sel)
+        taken_a = np.zeros(n + 1, bool)
+        taken_b = taken_a.copy()
+        taken_a[ca[sel]] = True
+        taken_b[cb[sel]] = True
+        by_a = by_a[~(taken_a[ca[by_a]] | taken_b[cb[by_a]])]
+        by_b = by_b[~(taken_a[ca[by_b]] | taken_b[cb[by_b]])]
+    else:
+        raise _no_convergence(max_iter)
+    return np.sort(np.concatenate(kept)) if kept else np.zeros(0, np.int64)
+
+
+def _no_convergence(max_iter: int) -> RuntimeError:
+    return RuntimeError(
+        f"greedy_one_to_one did not converge in {max_iter} rounds. "
+        "Worst case is one round per pair inside a block of "
+        "ALL-TIED scores (k identical records on each side need k "
+        "rounds); raise max_iter (ThresholdMatcher("
+        "one_to_one_max_iter=...)) or deduplicate exact-equal "
+        "records before matching."
+    )
+
+
 def greedy_one_to_one(pairs: DataFrame, max_iter: int = 100) -> DataFrame:
     """Keep a pair iff neither endpoint appears in a better-ranked kept
     pair — the reference's highest-score-first greedy 1:1 pruning.
@@ -693,13 +834,45 @@ def greedy_one_to_one(pairs: DataFrame, max_iter: int = 100) -> DataFrame:
     the minimum among BOTH its idx_a group and its idx_b group is
     kept; its endpoints' other pairs are discarded; repeat.
 
-    Per round: two min-per-key AGGREGATES joined back, not per-key
-    windows. The aggregates partial-combine map-side, so their shuffle
-    is O(distinct keys) instead of the windows' two full sort-shuffles
-    of the remaining pairs, and AQE turns the join back into a
-    broadcast whenever a round's best-per-key table is small — the
-    dominant case after round 1, when only contested endpoints remain.
+    Hybrid execution, like ``connected_components``: at most
+    ``_DRIVER_THRESHOLD`` pairs (with numeric scores and numeric or
+    string ids) are collected once as Arrow and run through the same
+    rounds in numpy; the result is row-for-row and schema-for-schema
+    the distributed fixpoint's. The collect holds every column, so the
+    driver needs about ``_DRIVER_THRESHOLD`` times the row width.
+
+    Distributed, per round: two min-per-key AGGREGATES joined back, not
+    per-key windows. The aggregates partial-combine map-side, so their
+    shuffle is O(distinct keys) instead of the windows' two full
+    sort-shuffles of the remaining pairs, and AQE turns the join back
+    into a broadcast whenever a round's best-per-key table is small —
+    the dominant case after round 1, when only contested endpoints
+    remain.
     """
+    # the driver solve orders values with numpy, which matches Spark's
+    # order for numbers and strings only
+    score_t, *id_ts = (
+        pairs.schema[c].dataType for c in ("sim_score", "idx_a", "idx_b")
+    )
+    tbl = None
+    if isinstance(score_t, T.NumericType) and all(
+        isinstance(t, (T.NumericType, T.StringType)) for t in id_ts
+    ):
+        pairs, tbl = _route(pairs, _DRIVER_THRESHOLD)
+    if tbl is not None:
+        keep = _greedy_on_driver(tbl, max_iter)
+        if not len(keep):
+            return pairs.limit(0)
+        # the fixpoint's USING joins (on idx_a, then on idx_b) move the
+        # join keys to the front; built directly, because analysing the
+        # round plan for its schema costs more than the whole solve
+        schema = T.StructType(
+            [pairs.schema["idx_b"], pairs.schema["idx_a"]]
+            + [f for f in pairs.schema if f.name not in ("idx_a", "idx_b")]
+        )
+        return pairs.sparkSession.createDataFrame(
+            tbl.take(keep).select(schema.names), schema=schema
+        )
     remaining = pairs.withColumn(
         "__r",
         F.struct(
@@ -710,8 +883,8 @@ def greedy_one_to_one(pairs: DataFrame, max_iter: int = 100) -> DataFrame:
     ).localCheckpoint(storageLevel=_ckpt_level())
     kept: DataFrame | None = None
     for rnd in range(max_iter):
-        if remaining.isEmpty():
-            break
+        # an empty `remaining` has an empty selection, so the sel check
+        # alone ends the loop, in the same round
         ma = remaining.groupBy("idx_a").agg(F.min("__r").alias("__ma"))
         mb = remaining.groupBy("idx_b").agg(F.min("__r").alias("__mb"))
         sel = (
@@ -735,14 +908,7 @@ def greedy_one_to_one(pairs: DataFrame, max_iter: int = 100) -> DataFrame:
             .localCheckpoint(storageLevel=_ckpt_level())
         )
     else:
-        raise RuntimeError(
-            f"greedy_one_to_one did not converge in {max_iter} rounds. "
-            "Worst case is one round per pair inside a block of "
-            "ALL-TIED scores (k identical records on each side need k "
-            "rounds); raise max_iter (ThresholdMatcher("
-            "one_to_one_max_iter=...)) or deduplicate exact-equal "
-            "records before matching."
-        )
+        raise _no_convergence(max_iter)
     if kept is None:
         return pairs.limit(0)
     return kept.drop("__r")

@@ -94,11 +94,15 @@ def main() -> int:
     # readings no one should pair with a bench result.
     # the 8-core leg must also be PLAUSIBLE in absolute terms (>= 40
     # GB/s for any healthy 8-core memcpy): a starved low leg flatters
-    # the ratio without the bus actually having capacity
+    # the ratio without the bus actually having capacity. An efficiency
+    # above 1 (plus noise) is physically impossible — 4x the cores
+    # cannot give more than 4x the work — so it marks a starved leg too
+    # (observed: cpu_ceiling_eff 6.4)
     out["valid"] = (
         out["memcpy"]["8_cores"] >= 40.0
         and out["memcpy"]["32_cores"] >= 5.0
         and out["memcpy"]["ratio_8_to_32"] <= 4.0
+        and all(out[m]["ceiling_eff"] <= 1.1 for m in ("memcpy", "cpu"))
     )
     print(json.dumps(out))
     return 0

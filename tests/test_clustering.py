@@ -5,11 +5,23 @@ import random
 
 import pytest
 
+from datamatch_spark import clustering
 from datamatch_spark.clustering import (
+    _route,
+    _stored,
     connected_components,
     greedy_one_to_one,
     split_cliques,
 )
+
+
+def _routes(monkeypatch):
+    """Yield once per greedy_one_to_one route: the driver solve (the
+    default threshold) and the distributed fixpoint (threshold 0). Each
+    greedy test runs both in one body, so its test id stays as it was."""
+    for threshold in (clustering._DRIVER_THRESHOLD, 0):
+        monkeypatch.setattr(clustering, "_DRIVER_THRESHOLD", threshold)
+        yield threshold
 
 
 def _uf_components(edges):
@@ -181,7 +193,7 @@ def _sequential_greedy(pairs):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_greedy_one_to_one_matches_sequential(spark, seed):
+def test_greedy_one_to_one_matches_sequential(spark, monkeypatch, seed):
     rng = random.Random(seed)
     pairs = list(
         {
@@ -190,13 +202,15 @@ def test_greedy_one_to_one_matches_sequential(spark, seed):
         }
     )
     df = spark.createDataFrame(pairs, "sim_score double, idx_a long, idx_b long")
-    got = sorted(
-        (r["sim_score"], r["idx_a"], r["idx_b"]) for r in greedy_one_to_one(df).collect()
-    )
-    assert got == _sequential_greedy(pairs)
+    for route in _routes(monkeypatch):
+        got = sorted(
+            (r["sim_score"], r["idx_a"], r["idx_b"])
+            for r in greedy_one_to_one(df).collect()
+        )
+        assert got == _sequential_greedy(pairs), route
 
 
-def test_greedy_one_to_one_adversarial_chain(spark):
+def test_greedy_one_to_one_adversarial_chain(spark, monkeypatch):
     """Strictly-decreasing scores along a bipartite chain force one
     dominant pair per round — the worst case for round count. Proves
     the kept-union lineage truncation keeps many-round runs working
@@ -208,12 +222,14 @@ def test_greedy_one_to_one_adversarial_chain(spark):
         a, b = (i + 1) // 2, i // 2 + 100
         pairs.append((round(1.0 - i * 0.01, 2), a, b))
     df = spark.createDataFrame(pairs, "sim_score double, idx_a long, idx_b long")
-    got = sorted(
-        (r["sim_score"], r["idx_a"], r["idx_b"]) for r in greedy_one_to_one(df).collect()
-    )
     expect = _sequential_greedy(pairs)
-    assert got == expect
-    assert len(got) == n // 2
+    for route in _routes(monkeypatch):
+        got = sorted(
+            (r["sim_score"], r["idx_a"], r["idx_b"])
+            for r in greedy_one_to_one(df).collect()
+        )
+        assert got == expect, route
+        assert len(got) == n // 2
 
 
 def test_connected_components_leaves_session_conf_alone(spark):
@@ -236,7 +252,7 @@ def test_connected_components_leaves_session_conf_alone(spark):
     assert comp[2] == 0 and comp[6] == 4  # chains 0-1-2-3, 4-5-6-7
 
 
-def test_greedy_one_to_one_max_iter_message(spark):
+def test_greedy_one_to_one_max_iter_message(spark, monkeypatch):
     """All-tied k x k blocks need one round per kept pair; the error
     must name the escape hatches."""
     from datamatch_spark.clustering import greedy_one_to_one
@@ -244,10 +260,119 @@ def test_greedy_one_to_one_max_iter_message(spark):
     k = 5
     rows = [(a, 100 + b, 1.0) for a in range(k) for b in range(k)]
     pairs = spark.createDataFrame(rows, "idx_a long, idx_b long, sim_score double")
-    with pytest.raises(RuntimeError, match="one_to_one_max_iter"):
-        greedy_one_to_one(pairs, max_iter=2).count()
-    got = {
-        (r["idx_a"], r["idx_b"])
-        for r in greedy_one_to_one(pairs, max_iter=k + 1).collect()
-    }
-    assert got == {(i, 100 + i) for i in range(k)}  # greedy diagonal
+    for route in _routes(monkeypatch):
+        with pytest.raises(RuntimeError, match="one_to_one_max_iter"):
+            greedy_one_to_one(pairs, max_iter=2).count()
+        got = {
+            (r["idx_a"], r["idx_b"])
+            for r in greedy_one_to_one(pairs, max_iter=k + 1).collect()
+        }
+        assert got == {(i, 100 + i) for i in range(k)}, route  # greedy diagonal
+
+
+def _random_pairs(spark, seed, id_type):
+    """Pairs with every case the routes must agree on: NULL endpoints,
+    NULL / NaN / signed-zero scores, tied scores, exact duplicate rows
+    and a passthrough column."""
+    rng = random.Random(seed)
+    rows = []
+    for _ in range(rng.randint(0, 50)):
+        a = None if rng.random() < 0.08 else rng.randint(0, 8)
+        b = None if rng.random() < 0.08 else rng.randint(0, 8)
+        if id_type == "string":
+            a = None if a is None else f"a{a}"
+            b = None if b is None else f"b{b}"
+        u = rng.random()
+        score = (
+            None if u < 0.07
+            else float("nan") if u < 0.14
+            else -0.0 if u < 0.18
+            else rng.choice([0.0, 0.5, 0.7, 0.9, 1.0])
+        )
+        rows.append((rng.randint(0, 3), a, score, b))
+    rows += rng.sample(rows, min(len(rows), 5))
+    return spark.createDataFrame(
+        rows, f"extra int, idx_a {id_type}, sim_score double, idx_b {id_type}"
+    )
+
+
+def _rows(df):
+    # NaN != NaN, so compare it through a marker
+    return sorted(
+        (tuple("NaN" if x != x else x for x in r) for r in df.collect()), key=repr
+    )
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+@pytest.mark.parametrize("seed", range(5))
+def test_greedy_one_to_one_driver_route_matches_fixpoint(
+    spark, monkeypatch, seed, id_type
+):
+    """The driver solve keeps exactly the fixpoint's rows (duplicates,
+    NULL endpoints and NULL/NaN scores included) with its schema."""
+    df = _random_pairs(spark, seed, id_type)
+    driver, dist = [greedy_one_to_one(df) for _ in _routes(monkeypatch)]
+    assert driver.schema == dist.schema
+    assert _rows(driver) == _rows(dist)
+
+
+def _jobs(spark, group, fn):
+    """Number of Spark jobs ``fn()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_driver_routes_run_one_collect(spark):
+    """Below driver_threshold each graph step is one bounded Arrow
+    collect, after one checkpoint job when its input is not stored yet:
+    no count, no fixpoint rounds."""
+    from pyspark.sql import functions as F
+
+    rng = random.Random(7)
+    rows = [(rng.randint(0, 9), rng.randint(100, 109), rng.random()) for _ in range(40)]
+    df = spark.createDataFrame(rows, "idx_a long, idx_b long, sim_score double")
+    assert _jobs(spark, "greedy-route", lambda: greedy_one_to_one(df)) <= 2
+    assert _jobs(spark, "cc-route", lambda: connected_components(df)) <= 2
+    stored = df.localCheckpoint()
+    assert _stored(stored.withColumn("sim_score", F.col("sim_score") * 2))
+    assert not _stored(stored.where(F.col("sim_score") > 0.5))
+    assert not _stored(stored.withColumn("r", F.rand()))
+    assert not _stored(df.localCheckpoint(eager=False))
+    assert _jobs(spark, "greedy-stored", lambda: greedy_one_to_one(stored)) == 1
+    assert _jobs(spark, "cc-stored", lambda: connected_components(stored)) == 1
+    # the threshold is inclusive
+    assert _route(df, 40)[1].num_rows == 40
+    assert _route(df, 39)[1] is None
+
+
+def test_route_computes_input_once(spark, monkeypatch):
+    """Above the threshold the route decision checkpoints an input that
+    is not stored yet, so the distributed rounds never compute it a
+    second time."""
+    from pyspark.sql import functions as F
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("double")
+    def score(x):
+        calls.add(1)
+        return (x % 7) / 7.0
+
+    n = 60
+    base = spark.range(n).select(
+        (F.col("id") % 10).alias("idx_a"), (F.col("id") % 13).alias("idx_b")
+    )
+    df = base.withColumn("sim_score", score("idx_a"))
+    ckpt, tbl = _route(df, 5)
+    assert tbl is None
+    assert ckpt.count() == n and calls.value == n
+    monkeypatch.setattr(clustering, "_DRIVER_THRESHOLD", 0)
+    greedy_one_to_one(df.withColumn("idx_b", F.col("idx_b") + 100)).count()
+    assert calls.value == 2 * n
+    connected_components(df.where(F.col("sim_score") >= 0), driver_threshold=0).count()
+    assert calls.value == 3 * n
