@@ -12,13 +12,19 @@ Two corpus profiles (corpus.py):
   the reference output depends on PYTHONHASHSEED (set-iteration order,
   SURVEY.md §8.2). Pair sets are still exactly equal (order-free); the
   cluster comparison gets a worst-case floor instead of 0.99.
+
+The oracle comparisons need the reference checkout at REFERENCE_DIR and
+skip where it is absent; ``test_recall_vs_planted_entities`` checks the
+engine against the planted gold pairs alone and runs either way.
 """
 
+import os
 import sys
 import types
 
 import pytest
 
+import datamatch_spark as dms
 from datamatch_spark import (
     ColumnsIndex,
     DateSimilarity,
@@ -34,6 +40,7 @@ from datamatch_spark.corpus import (
     project_fields,
 )
 
+REFERENCE_DIR = "/root/reference"
 THRESHOLD = 0.8
 CFGS = {
     "clean": CorpusConfig(n_docs=450, seed=7, profile="clean"),
@@ -43,6 +50,9 @@ CFGS = {
 
 @pytest.fixture(scope="module")
 def reference_datamatch():
+    if not os.path.isfile(os.path.join(REFERENCE_DIR, "datamatch", "__init__.py")):
+        pytest.skip(f"reference checkout not found at {REFERENCE_DIR}")
+    # the reference's C deps, served by the verified pure-python kernels
     lev = types.ModuleType("Levenshtein")
     lev.ratio = kernels.lev_ratio
     lev.jaro_winkler = kernels.jaro_winkler
@@ -50,13 +60,20 @@ def reference_datamatch():
     unid.unidecode = kernels.unidecode_ascii
     tq = types.ModuleType("tqdm")
     tq.tqdm = lambda it, **kw: it
+    added = []
     for name, mod in [("Levenshtein", lev), ("unidecode", unid), ("tqdm", tq)]:
-        sys.modules.setdefault(name, mod)
-    sys.path.insert(0, "/root/reference")
-    import datamatch as ref  # noqa: PLC0415
+        if name not in sys.modules:
+            sys.modules[name] = mod
+            added.append(name)
+    sys.path.insert(0, REFERENCE_DIR)
+    try:
+        import datamatch as ref  # noqa: PLC0415
 
-    yield ref
-    sys.path.remove("/root/reference")
+        yield ref
+    finally:
+        sys.path.remove(REFERENCE_DIR)
+        for name in added:
+            sys.modules.pop(name, None)
 
 
 def _f1(pred: set, truth: set) -> float:
@@ -76,41 +93,52 @@ def _cluster_pairs(clusters) -> set:
     return out
 
 
-_cache: dict = {}
+_ref_cache: dict = {}
+_engine_cache: dict = {}
 
 
-def _results(profile, spark, ref):
-    if profile in _cache:
-        return _cache[profile]
-    cfg = CFGS[profile]
-    sim_args = lambda mod: {  # noqa: E731
+def _sim_args(mod):
+    return {
         "last": mod.JaroWinklerSimilarity(),
         "first": mod.JaroWinklerSimilarity(),
         "dob": mod.DateSimilarity(),
     }
-    flat = generate_flat_pandas(cfg).set_index("doc_id")[
-        ["last", "first", "dob", "agency", "blk"]
-    ]
-    m_ref = ref.ThresholdMatcher(ref.ColumnsIndex("blk"), sim_args(ref), flat)
-    ref_pairs = {
-        tuple(sorted(p))
-        for p in m_ref.get_index_pairs_within_thresholds(THRESHOLD, 1.0)
-    }
-    ref_cp = _cluster_pairs(
-        m_ref.get_index_clusters_within_thresholds(THRESHOLD, 1.0)
-    )
 
-    import datamatch_spark as dms
 
-    docs = generate_documents(spark, cfg)
-    fields = project_fields(docs).drop("spans")
-    m = ThresholdMatcher(
-        ColumnsIndex("blk"), sim_args(dms), fields, row_key="doc_id"
-    )
-    got_pairs = set(m.collect_index_pairs_within_thresholds(THRESHOLD, 1.0))
-    got_cp = _cluster_pairs(m.get_index_clusters_within_thresholds(THRESHOLD, 1.0))
-    _cache[profile] = (ref_pairs, ref_cp, got_pairs, got_cp)
-    return _cache[profile]
+def _reference_results(profile, ref):
+    if profile not in _ref_cache:
+        flat = generate_flat_pandas(CFGS[profile]).set_index("doc_id")[
+            ["last", "first", "dob", "agency", "blk"]
+        ]
+        m_ref = ref.ThresholdMatcher(ref.ColumnsIndex("blk"), _sim_args(ref), flat)
+        ref_pairs = {
+            tuple(sorted(p))
+            for p in m_ref.get_index_pairs_within_thresholds(THRESHOLD, 1.0)
+        }
+        ref_cp = _cluster_pairs(
+            m_ref.get_index_clusters_within_thresholds(THRESHOLD, 1.0)
+        )
+        _ref_cache[profile] = (ref_pairs, ref_cp)
+    return _ref_cache[profile]
+
+
+def _engine_results(profile, spark):
+    if profile not in _engine_cache:
+        docs = generate_documents(spark, CFGS[profile])
+        fields = project_fields(docs).drop("spans")
+        m = ThresholdMatcher(
+            ColumnsIndex("blk"), _sim_args(dms), fields, row_key="doc_id"
+        )
+        got_pairs = set(m.collect_index_pairs_within_thresholds(THRESHOLD, 1.0))
+        got_cp = _cluster_pairs(
+            m.get_index_clusters_within_thresholds(THRESHOLD, 1.0)
+        )
+        _engine_cache[profile] = (got_pairs, got_cp)
+    return _engine_cache[profile]
+
+
+def _results(profile, spark, ref):
+    return _reference_results(profile, ref) + _engine_results(profile, spark)
 
 
 @pytest.mark.parametrize("profile", ["clean", "ambiguous"])
@@ -138,8 +166,8 @@ def test_cluster_f1_ambiguous_floor(spark, reference_datamatch):
     assert labeled >= 0.95
 
 
-def test_recall_vs_planted_entities(spark, reference_datamatch):
-    _, _, got_pairs, got_cp = _results("clean", spark, reference_datamatch)
+def test_recall_vs_planted_entities(spark):
+    got_pairs, _ = _engine_results("clean", spark)
     gold = gold_pairs_pandas(CFGS["clean"])
     tp = len(got_pairs & gold)
     assert tp / len(gold) > 0.9  # clean profile: high recall expected
