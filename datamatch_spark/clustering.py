@@ -18,15 +18,16 @@
   locally-dominant-pair fixpoint, which yields the identical matching
   under a strict total pair order (score DESC, idx_a ASC, idx_b ASC).
 
-Both graph steps use hybrid execution (same spirit as broadcast
-joins) through one route decision, ``_route``: an input that is not
-stored yet is checkpointed, then one bounded Arrow collect of at most
-``threshold + 1`` stored rows picks the route. An input that fits is
-solved in numpy on the driver — CC by min-label propagation, the 1:1
-prune by the same locally-dominant fixpoint — because post-threshold
-pair sets are usually tiny relative to the candidate set. Larger inputs
-run the distributed rounds above on the stored rows, so the input is
-computed once on either route.
+CC, the 1:1 prune and ``split_clique_members`` use hybrid execution
+(same spirit as broadcast joins) through one route decision,
+``_route``: an input that is not stored yet is checkpointed, then one
+bounded Arrow collect of at most ``threshold + 1`` stored rows picks
+the route. An input that fits is solved on the driver — CC by numpy
+min-label propagation, the 1:1 prune by the same locally-dominant
+fixpoint, the clique split by the same greedy walk per component —
+because post-threshold pair sets are usually tiny relative to the
+candidate set. Larger inputs run the distributed paths above on the
+stored rows, so the input is computed once on either route.
 """
 
 from __future__ import annotations
@@ -64,6 +65,12 @@ def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
 # inputs of at most this many rows are solved on the driver
 _DRIVER_THRESHOLD = 1_000_000
+# the clique split's driver walk is single-threaded Python, while the
+# packed path walks components on every core; measured on a 4-core
+# host (median of 3, components of 2-12 nodes), the driver route wins
+# at 100k edges (0.73 vs 1.02 s), breaks even at 200k and loses at 1M
+# (4.39 vs 2.03 s)
+_CLIQUE_DRIVER_EDGES = 200_000
 
 
 def _stored(df: DataFrame) -> bool:
@@ -185,73 +192,39 @@ def connected_components(
         # numpy canonicalization, matching _canon: drop null endpoints
         # and self-loops (duplicate edges are harmless to label
         # propagation and skipped rather than deduped)
-        pdf = tbl.drop_null().to_pandas()
-        ua, va = pdf["u"].to_numpy(), pdf["v"].to_numpy()
-        keep = ua != va
-        ua, va = ua[keep], va[keep]
-        # vectorized min-label propagation: the Row collect + pure-Python
-        # union-find this replaces was ~10x slower at bench edge counts
-        # (every Row and every find() is Python-object work); labels
-        # here move through numpy only. Exotic node types that numpy
-        # cannot sort fall back to the original loop (same output either
-        # way: node -> minimum node id of its component).
-        try:
-            uv = np.concatenate([ua, va])
-            # np.unique SORTS uniques, so label index order == node
-            # value order and the minimum label is the minimum node id
-            # (object/string arrays compare with Python's `<`, which
-            # matches Spark's UTF8 binary order — see grouped.py)
-            uniq, codes = np.unique(uv, return_inverse=True)
-            n_edges = len(ua)
-            cu, cv = codes[:n_edges], codes[n_edges:]
-            lab = np.arange(len(uniq), dtype=np.int64)
-            # per-node min-reduce via a PRECOMPUTED endpoint sort +
-            # minimum.reduceat (ufunc.at is unbuffered and ~20x slower)
-            order = np.argsort(codes, kind="stable")
-            ends_s = codes[order]
-            touch, starts = np.unique(ends_s, return_index=True)
-            for _ in range(max_iter):
-                m = np.minimum(lab[cu], lab[cv])
-                mins = np.minimum.reduceat(
-                    np.concatenate([m, m])[order], starts
-                )
-                lab[touch] = np.minimum(lab[touch], mins)
-                while True:  # pointer jumping to the round's fixpoint
-                    nl = lab[lab]
-                    if np.array_equal(nl, lab):
-                        break
-                    lab = nl
-                if np.array_equal(lab[cu], lab[cv]):
+        tbl = tbl.drop_null()
+        cu, cv, nodes = _node_codes(tbl.column("u"), tbl.column("v"))
+        keep = cu != cv
+        cu, cv = cu[keep], cv[keep]
+        # vectorized min-label propagation over the node codes: codes
+        # follow the node order, so the minimum label is the minimum
+        # node id
+        codes = np.concatenate([cu, cv])
+        lab = np.arange(len(nodes), dtype=np.int64)
+        # per-node min-reduce via a PRECOMPUTED endpoint sort +
+        # minimum.reduceat (ufunc.at is unbuffered and ~20x slower)
+        order = np.argsort(codes, kind="stable")
+        touch, starts = np.unique(codes[order], return_index=True)
+        for _ in range(max_iter):
+            m = np.minimum(lab[cu], lab[cv])
+            mins = np.minimum.reduceat(np.concatenate([m, m])[order], starts)
+            lab[touch] = np.minimum(lab[touch], mins)
+            while True:  # pointer jumping to the round's fixpoint
+                nl = lab[lab]
+                if np.array_equal(nl, lab):
                     break
-            else:  # pragma: no cover - defensive
-                raise RuntimeError(
-                    f"driver label propagation did not converge in "
-                    f"{max_iter} rounds"
-                )
-            out_pdf = pd.DataFrame(
-                {"node": uniq, "component": uniq[lab]}
+                lab = nl
+            if np.array_equal(lab[cu], lab[cv]):
+                break
+        else:  # pragma: no cover - defensive
+            raise RuntimeError(
+                f"driver label propagation did not converge in "
+                f"{max_iter} rounds"
             )
-            return spark.createDataFrame(out_pdf, schema=out_schema)
-        except (TypeError, ValueError):  # pragma: no cover - exotic ids
-            parent: dict = {}
-
-            def find(x):
-                parent.setdefault(x, x)
-                root = x
-                while parent[root] != root:
-                    root = parent[root]
-                while parent[x] != root:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for u, v in zip(ua.tolist(), va.tolist()):
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    if rv < ru:
-                        ru, rv = rv, ru
-                    parent[rv] = ru
-            rows = [(n, find(n)) for n in parent]
-            return spark.createDataFrame(rows, schema=out_schema)
+        out = pa.table(
+            {"node": nodes.take(touch), "component": nodes.take(lab[touch])}
+        )
+        return spark.createDataFrame(out, schema=out_schema)
 
     e = _canon(raw, "u", "v").localCheckpoint(storageLevel=_ckpt_level())
 
@@ -412,11 +385,7 @@ def split_cliques(
             rows = []
             for comp, edges in zip(pdf["component"], pdf["edges"]):
                 if len(edges) > max_component_edges:
-                    raise ValueError(
-                        f"component {comp!r} has {len(edges)} edges "
-                        f"(> max_component_edges={max_component_edges}); "
-                        "raise the score threshold or use finer blocking"
-                    )
+                    raise _oversized(comp, len(edges), max_component_edges)
                 rows.extend(
                     _split_component(
                         comp, [(e["sim_score"], e["idx_a"], e["idx_b"]) for e in edges]
@@ -427,6 +396,54 @@ def split_cliques(
             )
 
     return packed.mapInPandas(split_batches, schema=out_schema)
+
+
+def _oversized(comp, n_edges: int, max_component_edges: int) -> ValueError:
+    return ValueError(
+        f"component {comp!r} has {n_edges} edges "
+        f"(> max_component_edges={max_component_edges}); "
+        "raise the score threshold or use finer blocking"
+    )
+
+
+def _walk_component(comp, edges, cids: list, members: list) -> None:
+    """Append the (cluster_id, member) rows of one component's greedy
+    cliques, given its (idx_a, idx_b) edges."""
+    adjacency: dict = {}
+    for ia, ib in edges:
+        adjacency.setdefault(ia, set()).add(ib)
+        adjacency.setdefault(ib, set()).add(ia)
+    for k, mem in enumerate(_greedy_cliques(adjacency.keys(), adjacency)):
+        cids.extend([f"{comp}|{k}"] * len(mem))
+        members.extend(sorted(mem))
+
+
+def _clique_members_on_driver(tbl, max_component_edges: int):
+    """``(cluster_id list, row_key array)`` of the packed path's walk,
+    run in the driver over a (component, idx_a, idx_b) Arrow table:
+    the same ``_greedy_cliques`` walk per component, on node codes
+    that follow the id order, so the same cliques and ``component|k``
+    ids."""
+    comp = tbl.column("component").combine_chunks()
+    cc = _rank_codes(comp)
+    ca, cb, nodes = _node_codes(tbl.column("idx_a"), tbl.column("idx_b"))
+    if (ca == 0).any() or (cb == 0).any():
+        raise ValueError("split_clique_members: NULL idx_a/idx_b in the input")
+    order = np.argsort(cc, kind="stable")
+    cc = cc[order]
+    first = np.ones(len(cc), bool)
+    first[1:] = cc[1:] != cc[:-1]
+    firsts = np.flatnonzero(first)
+    sizes = np.diff(np.append(firsts, len(cc)))
+    comps = comp.take(order[firsts]).to_pylist()
+    if (sizes > max_component_edges).any():
+        big = int(np.argmax(sizes > max_component_edges))
+        raise _oversized(comps[big], int(sizes[big]), max_component_edges)
+    us, vs = ca[order].tolist(), cb[order].tolist()
+    cids, members = [], []
+    for c, lo, n in zip(comps, firsts.tolist(), sizes.tolist()):
+        _walk_component(c, zip(us[lo : lo + n], vs[lo : lo + n]), cids, members)
+    return cids, nodes.take(np.asarray(members, np.int64))
 
 
 def split_clique_members(
@@ -442,7 +459,13 @@ def split_clique_members(
     column and the caller skips a union + distinct shuffle — cliques
     are disjoint and members unique within a clique by construction.
     Used by assignment-shaped getters; report getters that need pair
-    rows keep split_cliques."""
+    rows keep split_cliques.
+
+    Hybrid execution, like ``connected_components``: an input of at
+    most ``_CLIQUE_DRIVER_EDGES`` rows is walked on the driver after one
+    bounded Arrow collect (``_route``), with no shuffle and no Python
+    task; larger inputs run the packed ``groupBy`` + ``mapInPandas``
+    walk on the stored rows."""
     idx_type = pairs_with_component.schema["idx_a"].dataType
     out_schema = T.StructType(
         [
@@ -450,7 +473,17 @@ def split_clique_members(
             T.StructField("row_key", idx_type),
         ]
     )
-    packed = pairs_with_component.groupBy("component").agg(
+    stored, tbl = _route(
+        pairs_with_component.select("component", "idx_a", "idx_b"),
+        _CLIQUE_DRIVER_EDGES,
+    )
+    if tbl is not None:
+        cids, members = _clique_members_on_driver(tbl, max_component_edges)
+        return stored.sparkSession.createDataFrame(
+            pa.table({"cluster_id": pa.array(cids, pa.string()), "row_key": members}),
+            schema=out_schema,
+        )
+    packed = stored.groupBy("component").agg(
         F.collect_list(F.struct("idx_a", "idx_b")).alias("edges")
     )
 
@@ -459,23 +492,10 @@ def split_clique_members(
             cids, members = [], []
             for comp, edges in zip(pdf["component"], pdf["edges"]):
                 if len(edges) > max_component_edges:
-                    raise ValueError(
-                        f"component {comp!r} has {len(edges)} edges "
-                        f"(> max_component_edges={max_component_edges}); "
-                        "raise the score threshold or use finer blocking"
-                    )
-                adjacency: dict = {}
-                for e in edges:
-                    ia, ib = e["idx_a"], e["idx_b"]
-                    adjacency.setdefault(ia, set()).add(ib)
-                    adjacency.setdefault(ib, set()).add(ia)
-                for k, mem in enumerate(
-                    _greedy_cliques(adjacency.keys(), adjacency)
-                ):
-                    cid = f"{comp}|{k}"
-                    for m in sorted(mem):
-                        cids.append(cid)
-                        members.append(m)
+                    raise _oversized(comp, len(edges), max_component_edges)
+                _walk_component(
+                    comp, ((e["idx_a"], e["idx_b"]) for e in edges), cids, members
+                )
             yield pd.DataFrame({"cluster_id": cids, "row_key": members})
 
     return packed.mapInPandas(member_batches, schema=out_schema)
@@ -752,6 +772,21 @@ def _rank_codes(col, negate: bool = False) -> np.ndarray:
     _, inv = np.unique(-vals if negate else vals, return_inverse=True)
     codes[valid] = inv + 1
     return codes
+
+
+def _node_codes(a, b):
+    """Dense codes shared by two id columns, in Spark's ascending order
+    (``_rank_codes``: NULL is code 0): ``(codes of a, codes of b,
+    nodes)``, where ``nodes[c]`` is the id with code ``c``. Ids numpy
+    cannot order (structs, arrays, maps) raise ``TypeError``."""
+    ids = pa.concat_arrays(
+        [a.combine_chunks(), b.combine_chunks().cast(a.type)]
+    )
+    codes = _rank_codes(ids)
+    pos = np.full(codes.max(initial=0) + 1, -1, np.int64)
+    pos[codes] = np.arange(len(codes))
+    nodes = ids.take(pa.array(pos, mask=pos < 0))
+    return codes[: len(a)], codes[len(a) :], nodes
 
 
 def _group_min_rows(

@@ -650,11 +650,7 @@ def grouped_scored_pairs_bucketed(
         # the union lost the buckets' co-partitioning; pin the group
         # exchange width so AQE cannot coalesce the narrow input into
         # few fat pair-producing tasks
-        from .session import effective_parallelism
-
-        members = members.repartition(
-            2 * effective_parallelism(spark), F.col(BLOCK_KEY)
-        )
+        members = members.repartition(_n_parts(members), F.col(BLOCK_KEY))
 
     # match mode just repartitioned by block (co-locating every (block,
     # l, t) group), so it can use the merged scorer; dedup mode's

@@ -32,7 +32,7 @@ from .clustering import (
 )
 from .filters import BaseFilter
 from .indices import BaseIndex
-from .pairing import PairingConfig, candidate_pairs
+from .pairing import PairingConfig, _n_parts, candidate_pairs
 from .scorers import CompileCtx, coerce_scorer
 from .variators import Variator
 
@@ -79,7 +79,9 @@ class ThresholdMatcher:
         already repartitions the cheap keyed side pre-blowup
         (PairingConfig.target_partitions), so pairs and scoring run
         wide with no post-join shuffle; set a number only when a custom
-        pairing path leaves the pair frame under-partitioned.
+        pairing path leaves the pair frame under-partitioned. ``"auto"``
+        uses pair generation's width (one task per core, or
+        ``target_partitions``).
     """
 
     def __init__(
@@ -265,9 +267,7 @@ class ThresholdMatcher:
         if self._score_partitions is not None:
             n_parts = self._score_partitions
             if n_parts == "auto":
-                from .session import effective_parallelism
-
-                n_parts = 2 * effective_parallelism(self._dfa.sparkSession)
+                n_parts = _n_parts(pairs, self._cfg)
             elif not isinstance(n_parts, int):
                 # repartition('64') would treat the string as a COLUMN
                 # name and die with an opaque UNRESOLVED_COLUMN

@@ -62,7 +62,7 @@ class PairingConfig:
     max_hot_keys: int = 100_000
     salt_enabled: bool = True
     # partition count for the LEFT keyed side of the pair join.
-    # None = 2×defaultParallelism. This is the knob that keeps pair
+    # None = one task per core. This is the knob that keeps pair
     # generation parallel: the keyed sides are small (ids + keys), so
     # Catalyst broadcasts the join and AQE sizes partitions by the
     # pre-join input bytes — the 10-100× pair blowup then lands in a
@@ -111,7 +111,7 @@ class PairingConfig:
     # Adaptive cell oversubscription. rows_per_shard alone bounds the
     # WORST task but not the task COUNT: one mass-dominant hot block
     # (24k rows under the defaults) yields only s(s+1)/2 ≈ 78 cells,
-    # and those cells HASH into ~2×cores partitions — collisions plus
+    # and those cells HASH into ~cores partitions — collisions plus
     # coarse ~4M-pair granularity mean the last scheduling wave on a
     # wide cluster idles most cores behind a couple of double-loaded
     # tasks (measured p95/p50 ≈ 5.7× on the 4×8-executor bench; the
@@ -409,16 +409,19 @@ def _anti_hot(side: DataFrame, hot: list) -> DataFrame:
     return side.join(hot_df, on=BLOCK_KEY, how="left_anti")
 
 
-def _n_parts(side: DataFrame, cfg: PairingConfig) -> int:
-    if cfg.target_partitions is not None:
+def _n_parts(side: DataFrame, cfg: PairingConfig | None = None) -> int:
+    """Partition count of every Python pair/score stage: the explicit
+    ``cfg.target_partitions``, else one task per core."""
+    if cfg is not None and cfg.target_partitions is not None:
         return cfg.target_partitions
     from .session import effective_parallelism
 
-    # 2× total cores: pair output is 10-100× the input, so over-split
-    # the cheap input side to keep the blowup (and the scoring UDFs
-    # downstream) wide. effective_parallelism is race-free in fresh
-    # standalone sessions (see its docstring).
-    return 2 * effective_parallelism(side.sparkSession)
+    # one task per core: every Python scoring task pays a fixed
+    # start-up cost (NOTES.md), so a second wave of tasks costs more
+    # than the balance it buys; hot blocks are still cut into many
+    # more cells than partitions (_wide_shard_cap). effective_parallelism
+    # is race-free in fresh standalone sessions (see its docstring).
+    return effective_parallelism(side.sparkSession)
 
 
 def _dedup_pairs_plain(side: DataFrame, cfg: PairingConfig) -> DataFrame:

@@ -11,16 +11,18 @@ from datamatch_spark.clustering import (
     _stored,
     connected_components,
     greedy_one_to_one,
+    split_clique_members,
     split_cliques,
 )
 
 
-def _routes(monkeypatch):
-    """Yield once per greedy_one_to_one route: the driver solve (the
-    default threshold) and the distributed fixpoint (threshold 0). Each
-    greedy test runs both in one body, so its test id stays as it was."""
-    for threshold in (clustering._DRIVER_THRESHOLD, 0):
-        monkeypatch.setattr(clustering, "_DRIVER_THRESHOLD", threshold)
+def _routes(monkeypatch, constant="_DRIVER_THRESHOLD"):
+    """Yield once per route of the step whose threshold is ``constant``:
+    the driver solve (the default threshold) and the distributed path
+    (threshold 0). Each greedy test runs both in one body, so its test
+    id stays as it was."""
+    for threshold in (getattr(clustering, constant), 0):
+        monkeypatch.setattr(clustering, constant, threshold)
         yield threshold
 
 
@@ -345,6 +347,8 @@ def test_driver_routes_run_one_collect(spark):
     assert not _stored(df.localCheckpoint(eager=False))
     assert _jobs(spark, "greedy-stored", lambda: greedy_one_to_one(stored)) == 1
     assert _jobs(spark, "cc-stored", lambda: connected_components(stored)) == 1
+    tagged = stored.withColumn("component", F.least("idx_a", "idx_b"))
+    assert _jobs(spark, "split-stored", lambda: split_clique_members(tagged)) == 1
     # the threshold is inclusive
     assert _route(df, 40)[1].num_rows == 40
     assert _route(df, 39)[1] is None
@@ -376,3 +380,102 @@ def test_route_computes_input_once(spark, monkeypatch):
     assert calls.value == 2 * n
     connected_components(df.where(F.col("sim_score") >= 0), driver_threshold=0).count()
     assert calls.value == 3 * n
+
+
+def _random_tagged(spark, seed, id_type):
+    """(component, sim_score, idx_a, idx_b) rows of random components:
+    duplicate edges, self-loops, and one non-clique component of 9
+    nodes (a cycle plus chords), labeled by their minimum node."""
+    rng = random.Random(seed)
+    node = (lambda i: f"n{i:03d}") if id_type == "string" else (lambda i: i * 7)
+    rows = []
+    for base in range(0, 400, 20):
+        n = rng.randint(2, 12)
+        nodes = [node(base + i) for i in range(n)]
+        edges = [tuple(rng.sample(nodes, 2)) for _ in range(rng.randint(1, 3 * n))]
+        if base == 0:
+            nodes = [node(i) for i in range(9)]
+            edges = [(nodes[i], nodes[(i + 1) % 9]) for i in range(9)]
+            edges += [(nodes[0], nodes[2]), (nodes[3], nodes[6])]
+        edges += rng.sample(edges, min(3, len(edges)))
+        edges.append((nodes[-1], nodes[-1]))
+        rows += [(min(nodes), rng.random(), a, b) for a, b in edges]
+    rng.shuffle(rows)
+    return spark.createDataFrame(
+        rows, f"component {id_type}, sim_score double, idx_a {id_type}, idx_b {id_type}"
+    )
+
+
+def _member_routes(monkeypatch):
+    """split_clique_members' driver walk, then its packed mapInPandas walk."""
+    return _routes(monkeypatch, "_CLIQUE_DRIVER_EDGES")
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+@pytest.mark.parametrize("seed", range(3))
+def test_split_clique_members_driver_route_matches_packed(
+    spark, monkeypatch, seed, id_type
+):
+    """The driver walk emits the packed walk's rows (same cliques, same
+    ``component|k`` ids) with its schema, and both agree with
+    split_cliques' pair rows exploded into members."""
+    df = _random_tagged(spark, seed, id_type)
+    driver, packed = [split_clique_members(df) for _ in _member_routes(monkeypatch)]
+    assert driver.schema == packed.schema
+    assert sorted(driver.collect()) == sorted(packed.collect())
+    want = {
+        (r["cluster_id"], m)
+        for r in split_cliques(df).collect()
+        for m in (r["idx_a"], r["idx_b"])
+    }
+    got = [tuple(r) for r in driver.collect()]
+    assert len(got) == len(want) and set(got) == want
+    # the 9-node non-clique component splits into several cliques
+    first = "n000" if id_type == "string" else "0"
+    assert f"{first}|1" in {c for c, _ in got}
+
+
+def test_split_clique_members_empty_and_oversized(spark, monkeypatch):
+    """Both routes return an empty frame for an empty input and raise
+    the same max_component_edges error."""
+    schema = "component long, sim_score double, idx_a long, idx_b long"
+    empty = spark.createDataFrame([], schema)
+    for _ in _member_routes(monkeypatch):
+        out = split_clique_members(empty)
+        assert out.collect() == [] and out.columns == ["cluster_id", "row_key"]
+    df = spark.createDataFrame(
+        [(0, 0.9, 0, 1), (0, 0.8, 1, 2), (0, 0.7, 0, 2), (5, 0.9, 5, 6)], schema
+    )
+    msg = r"component 0 has 3 edges \(> max_component_edges=2\)"
+    for _ in _member_routes(monkeypatch):
+        with pytest.raises(Exception, match=msg):
+            split_clique_members(df, max_component_edges=2).collect()
+
+
+def test_connected_components_struct_ids_fail_on_driver(spark):
+    """Struct node ids have no numpy order: the driver route raises
+    TypeError (the union-find fallback that once caught it could not
+    hash them either)."""
+    df = spark.createDataFrame(
+        [((1,), (2,)), ((2,), (3,))],
+        "idx_a struct<k: long>, idx_b struct<k: long>",
+    )
+    with pytest.raises(TypeError):
+        connected_components(df)
+
+
+def test_cluster_assignments_equal_on_both_routes(spark, monkeypatch):
+    """A matcher's (cluster_id, row_key) table does not depend on the
+    clique split's route."""
+    from datamatch_spark import JaroWinklerSimilarity, NoopIndex, ThresholdMatcher
+
+    names = ["beech", "beach", "bech", "beeches", "dupas", "dupaz", "duppas",
+             "rhea", "rhee", "brown", "bowen", "browne"]
+    df = spark.createDataFrame(list(enumerate(names)), "row_key long, last string")
+    m = ThresholdMatcher(NoopIndex(), {"last": JaroWinklerSimilarity()}, df)
+    driver, packed = [
+        m.get_cluster_assignments(0.75) for _ in _member_routes(monkeypatch)
+    ]
+    assert driver.schema == packed.schema
+    assert sorted(driver.collect()) == sorted(packed.collect())
+    assert driver.count() > 4

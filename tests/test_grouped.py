@@ -355,3 +355,22 @@ def test_cold_rows_have_single_cell_membership(spark):
     hot = [per_row[i] for i in range(120)]
     assert all(n == 1 for n in cold), cold[:5]  # ONE membership per cold row
     assert all(n == 4 for n in hot), hot[:5]  # ceil(120/30)=4 cells per hot row
+
+
+@pytest.mark.parametrize("grouped", [True, False])
+def test_scoring_runs_one_task_per_core(spark, grouped):
+    """Grouped and join-path scoring run one partition per core by
+    default, and ``target_partitions`` when it is set."""
+    from datamatch_spark.session import effective_parallelism
+
+    df = _fixture(spark)
+    for kw, want in (({}, effective_parallelism(spark)), ({"target_partitions": 3}, 3)):
+        m = ThresholdMatcher(
+            ColumnsIndex("blk"), SIMS, df, row_key="row_key", validate=False,
+            pairing_config=PairingConfig(grouped_scoring=grouped, **kw),
+            defer=True,
+        )
+        scored = m._build_scored()
+        plan = scored._jdf.queryExecution().executedPlan().toString()
+        assert ("AS idx_a" not in plan) == grouped, plan
+        assert scored.rdd.getNumPartitions() == want
