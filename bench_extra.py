@@ -147,8 +147,8 @@ def profile_er(spark, sf_dir, sf):
         ThresholdMatcher,
     )
     from datamatch_spark.corpus import CorpusConfig, generate_documents, project_fields
-    from datamatch_spark.grouped import _dedup_members, _flat_side
-    from datamatch_spark.pairing import _n_parts
+    from datamatch_spark.grouped import _flat_side
+    from datamatch_spark.pairing import _n_parts, cell_members
     from datamatch_spark.indices import BLOCK_KEY
 
     n_docs = max(3000, int(500_000 * sf))
@@ -173,7 +173,7 @@ def profile_er(spark, sf_dir, sf):
     fmap = {c: f"__f{i}" for i, c in enumerate(needed)}
     side = _flat_side(fields, ColumnsIndex("blk"), "doc_id", needed, fmap)
     stages["keyed_side_noop"], _ = timed(spark, "er: keyed_side", lambda: noop(side))
-    members = _dedup_members(side, list(fmap.values()), pcfg)
+    members = cell_members(side, pcfg)
     stages["members_noop"], _ = timed(spark, "er: members", lambda: noop(members))
     members_rep = members.repartition(
         _n_parts(side, pcfg), F.col(BLOCK_KEY), F.col("__l"), F.col("__t")

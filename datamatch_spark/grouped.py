@@ -15,26 +15,14 @@ and the only O(pairs) data anywhere is the (idx_a, idx_b, sim_score)
 output. At reference scale (10^12 docs, mean block 40) that is the
 difference between ~petabytes and ~tens of TB of Arrow traffic.
 
-Skew handling is FULLY DECLARATIVE — no driver round-trip: per-block
-counts come from a map-side partial agg whose hot tail broadcasts into
-a LEFT join, hot rows get ``ceil(n / rows_per_shard)`` shards, and ONE
-``transform(sequence(...))`` expression emits each row's grid-cell
-memberships.
-
-Dedup mode: cell (min(shard,c), max(shard,c)) for every c; a row is
-the LOW member when c >= shard. Cell (l, t), l < t scores the
-low×high cross product; cell (l, l) scores the in-shard triangle —
-together exactly the unordered pair set of the block, each pair once
-(the same enumeration _dedup_pairs_salted proves via its join; see
-pairing.py:275). Cold rows have one shard and fall out of the same
-expression as the single cell (0, 0).
-
-Match mode (A×B linkage): A rows shard ``sa`` ways and replicate to
-every B shard (cells (shard, c), c < sb); B rows shard ``sb`` ways and
-replicate to every A shard (cells (c, shard), c < sa); every cell
-scores the full A×B cross product — the GRID sharding of
-_match_pairs_salted (pairing.py:355) as group membership. Cold blocks
-are the single cell (0, 0).
+Skew handling is FULLY DECLARATIVE — no driver round-trip: each row's
+grid-cell memberships come from ``pairing.cell_members``, beside the
+join path's hot rules and shard counts. A cold block is the single
+cell (0, 0). Dedup cell (l, t), l < t, scores its low × high cross
+product and the diagonal cell (l, l) its in-shard triangle — the
+enumeration _dedup_pairs_salted proves via its join; every match cell
+scores its full A × B cross product — the GRID sharding of
+_match_pairs_salted as group membership.
 
 Pair-set and score parity with the join path is bit-identical
 (SimSumScorer._score_core / _swap_max_core are the shared
@@ -48,15 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .indices import BLOCK_KEY, BaseIndex
-from .pairing import (
-    PairingConfig,
-    _cell_target,
-    _grid_shards_expr,
-    _n_parts,
-    _shard_count_expr,
-    _wide_shard_cap,
-    keyed_side,
-)
+from .pairing import _CELL, PairingConfig, _n_parts, cell_members, keyed_side
 
 __all__ = [
     "grouped_scored_pairs",
@@ -164,95 +144,12 @@ def supports_grouped_scoring_bucketed(
     return _shape_ok(scorer, variator, recs)
 
 
-def _dedup_cells_expr() -> str:
-    # every row is a member of exactly __s cells: paired with each
-    # shard c, in cell (min(__shard, c), max(__shard, c)), as the LOW
-    # member (pos 0) when c >= __shard else the HIGH member (pos 1).
-    # c == __shard is the diagonal cell, pos 0.
-    return (
-        "explode(transform(sequence(0, __s - 1), c -> struct("
-        "least(__shard, c) as l, greatest(__shard, c) as t, "
-        "if(c >= __shard, 0, 1) as pos)))"
-    )
-
-
-def _match_cells_expr() -> str:
-    # A rows (__pos 0): cells (__shard, c) for every B shard c;
-    # B rows (__pos 1): cells (c, __shard) for every A shard c.
-    return (
-        "explode(transform(sequence(0, __s_other - 1), c -> struct("
-        "if(__pos = 0, __shard, c) as l, "
-        "if(__pos = 0, c, __shard) as t)))"
-    )
-
-
 def _flat_side(df, index, row_key, needed, fmap):
     side = keyed_side(df, index, row_key, needed, "idx", "rec")
     return side.select(
         "idx",
         BLOCK_KEY,
         *[F.col(f"rec.{c}").alias(fmap[c]) for c in needed],
-    )
-
-
-def _dedup_members(side: DataFrame, fcols: list, cfg: PairingConfig) -> DataFrame:
-    """Grid-cell membership frame for the dedup mode. A COLD row must
-    contribute exactly ONE member row — the module's O(rows) traffic
-    guarantee (pinned by tests/test_grouped.py's membership-count
-    test).
-
-    Shard counts come from HOT keys only: a map-side partial agg (the
-    shuffle carries (key, count) rows, never the corpus) whose top
-    ``max_hot_keys`` by size (largest first, so a biting cap leaves
-    the smallest offenders unsalted — same policy as _hot_blocks)
-    broadcast-LEFT-joins back onto the rows; cold rows miss the join
-    and coalesce to one shard. Catalyst left to its own estimates
-    plans an unfiltered counts join as an SMJ that re-shuffles the
-    whole corpus by key (plan-verified), hence the explicit broadcast
-    of the bounded hot tail. __s is computed INSIDE the hot frame:
-    computed from __n after the left join, cold rows would get __s=2,
-    not 1 — Spark's greatest() SKIPS nulls, so greatest(2, NULL) = 2
-    and the coalesce default never fires, silently doubling every
-    cold row's cell memberships (review r5)."""
-    if cfg.salt_enabled:
-        # per-task pair budget (rows_per_shard), adaptively widened
-        # toward the cluster-width cell-oversubscription cap so a
-        # mass-dominant block yields cells ≫ partitions (the SHARED
-        # Column twin of pairing._shard_count, so the grouped and
-        # join paths cannot drift — see
-        # PairingConfig.cell_oversubscription)
-        wide = _wide_shard_cap(cfg, _n_parts(side, cfg), grid=False)
-        s_expr = _shard_count_expr(F.col("__n"), cfg, wide, base_floor=2)
-        hot_counts = (
-            side.groupBy(BLOCK_KEY)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > cfg.salt_threshold)
-            .orderBy(F.col("__n").desc(), F.col(BLOCK_KEY).asc())
-            .limit(cfg.max_hot_keys)
-            .select(BLOCK_KEY, s_expr.cast("int").alias("__s_hot"))
-        )
-        tagged = side.join(
-            F.broadcast(hot_counts), on=BLOCK_KEY, how="left"
-        ).select(
-            side["*"],
-            F.coalesce(F.col("__s_hot"), F.lit(1)).alias("__s"),
-        )
-    else:
-        tagged = side.withColumn("__s", F.lit(1))
-    tagged = tagged.withColumn(
-        "__shard",
-        F.pmod(F.xxhash64(F.col("idx")), F.col("__s")).cast("int"),
-    )
-    cells = F.expr(_dedup_cells_expr())
-    return tagged.select(
-        "idx", BLOCK_KEY, *fcols, cells.alias("__cell")
-    ).select(
-        "idx",
-        BLOCK_KEY,
-        *fcols,
-        F.col("__cell.l").alias("__l"),
-        F.col("__cell.t").alias("__t"),
-        F.col("__cell.pos").alias("__pos"),
     )
 
 
@@ -285,81 +182,14 @@ def grouped_scored_pairs(
     fmap = {c: f"__f{i}" for i, c in enumerate(needed)}
 
     side_a = _flat_side(dfa, index, row_key, needed, fmap)
-    thr = float(cfg.salt_threshold * cfg.rows_per_shard)
-
+    idx_a_type = idx_b_type = side_a.schema["idx"].dataType
     if dedup:
-        members = _dedup_members(side_a, list(fmap.values()), cfg)
-        idx_a_type = idx_b_type = side_a.schema["idx"].dataType
+        members = cell_members(side_a, cfg)
     else:
         side_b = _flat_side(dfb, index, row_key, needed, fmap)
-        idx_a_type = side_a.schema["idx"].dataType
         idx_b_type = side_b.schema["idx"].dataType
-        union = side_a.withColumn("__pos", F.lit(0)).unionByName(
-            side_b.withColumn("__pos", F.lit(1))
-        )
-        if cfg.salt_enabled:
-            # hot iff the PAIR PRODUCT na·nb exceeds the budget —
-            # mirrors candidate_pairs' match-mode detection including
-            # the double cast (a degenerate key's long product can
-            # wrap) and the sa·sb ≥ 2 floor
-            ca = side_a.groupBy(BLOCK_KEY).agg(F.count(F.lit(1)).alias("__na"))
-            cb = side_b.groupBy(BLOCK_KEY).agg(F.count(F.lit(1)).alias("__nb"))
-            prod = F.col("__na").cast("double") * F.col("__nb").cast("double")
-            n_parts_ab = _n_parts(side_a, cfg)
-            wide = _wide_shard_cap(cfg, n_parts_ab, grid=True)
-            target = _cell_target(cfg, n_parts_ab)
-            # shared Column twin of pairing._grid_shards (per-side
-            # widening + asymmetric-block re-widening of the bigger
-            # side); the product guard stays in LONG — an int32 sa·sb
-            # would wrap for a degenerate mega-block and collapse sb
-            # to 2, one cell holding the whole cross product
-            sa, sb = _grid_shards_expr(
-                F.col("__na"), F.col("__nb"), cfg, wide, target
-            )
-            sb = F.when(sa * sb < 2, F.lit(2).cast("long")).otherwise(sb)
-            sa, sb = sa.cast("int"), sb.cast("int")
-            hot_counts = (
-                ca.join(cb, on=BLOCK_KEY)
-                .where(prod > F.lit(thr))
-                .orderBy(prod.desc(), F.col(BLOCK_KEY).asc())
-                .limit(cfg.max_hot_keys)
-                .select(BLOCK_KEY, sa.alias("__sa"), sb.alias("__sb"))
-            )
-            tagged = union.join(
-                F.broadcast(hot_counts), on=BLOCK_KEY, how="left"
-            ).select(
-                union["*"],
-                F.coalesce(F.col("__sa"), F.lit(1)).alias("__sa2"),
-                F.coalesce(F.col("__sb"), F.lit(1)).alias("__sb2"),
-            )
-            own = F.when(F.col("__pos") == 0, F.col("__sa2")).otherwise(
-                F.col("__sb2")
-            )
-            other = F.when(F.col("__pos") == 0, F.col("__sb2")).otherwise(
-                F.col("__sa2")
-            )
-            tagged = tagged.withColumn("__s_own", own).withColumn(
-                "__s_other", other
-            ).drop("__sa2", "__sb2")
-        else:
-            tagged = union.withColumn("__s_own", F.lit(1)).withColumn(
-                "__s_other", F.lit(1)
-            )
-        tagged = tagged.withColumn(
-            "__shard",
-            F.pmod(F.xxhash64(F.col("idx")), F.col("__s_own")).cast("int"),
-        )
-        cells = F.expr(_match_cells_expr())
-        members = tagged.select(
-            "idx", BLOCK_KEY, *fmap.values(), "__pos", cells.alias("__cell")
-        ).select(
-            "idx",
-            BLOCK_KEY,
-            *fmap.values(),
-            F.col("__cell.l").alias("__l"),
-            F.col("__cell.t").alias("__t"),
-            "__pos",
-        )
+        members_a, members_b = cell_members(side_a, cfg, side_b)
+        members = members_a.unionByName(members_b)
 
     # explicit REPARTITION_BY_NUM: a groups-scoring stage's output is
     # quadratic in its input, so AQE coalescing by INPUT bytes would
@@ -367,9 +197,7 @@ def grouped_scored_pairs(
     # pinned-width hash partition on the exact grouping keys also
     # guarantees every (block, cell) group is wholly contained in one
     # partition — the co-location contract the merged scorer needs.
-    members = members.repartition(
-        _n_parts(side_a, cfg), F.col(BLOCK_KEY), F.col("__l"), F.col("__t")
-    )
+    members = members.repartition(_n_parts(side_a, cfg), *_CELL)
 
     return _score_groups(
         members, {k: fmap[k] for k in needed}, scorer, swap_cols, dedup,

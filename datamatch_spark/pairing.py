@@ -679,3 +679,125 @@ def candidate_pairs(
     if index.multi_bucket:
         pairs = pairs.dropDuplicates(["idx_a", "idx_b"])
     return pairs
+
+
+# A row's grid cells as struct(l, t, pos). Dedup: the row pairs with
+# every shard c in cell (min(shard, c), max(shard, c)), as the LOW
+# member (pos 0) when c >= shard; c == shard is the diagonal cell.
+# Match: A rows (pos 0) take cells (shard, c) for every B shard c,
+# B rows (pos 1) cells (c, shard) for every A shard c.
+_DEDUP_CELLS = (
+    "transform(sequence(0, __s - 1), c -> struct(least(__shard, c) AS l, "
+    "greatest(__shard, c) AS t, if(c >= __shard, 0, 1) AS pos))"
+)
+_MATCH_CELLS = (
+    "transform(sequence(0, __s_other - 1), c -> "
+    "struct(__shard AS l, c AS t, 0 AS pos))",
+    "transform(sequence(0, __s_other - 1), c -> "
+    "struct(c AS l, __shard AS t, 1 AS pos))",
+)
+
+#: the grid-cell key of grouped scoring's groups
+_CELL = [BLOCK_KEY, "__l", "__t"]
+
+
+def _hot_keys(
+    counts: DataFrame, size: Column, threshold: float, cfg: PairingConfig,
+    shards: dict,
+) -> DataFrame:
+    """Broadcast (BLOCK_KEY, shard counts…) of the blocks whose
+    ``size`` exceeds ``threshold``: at most ``max_hot_keys``, the
+    LARGEST first (the policy of _hot_blocks), so a biting cap leaves
+    the smallest offenders unsalted. Shard counts are computed INSIDE
+    this frame: computed after the left join, a cold row would get
+    greatest(2, NULL) = 2 (Spark's greatest() skips NULLs), silently
+    doubling every cold row's cell memberships."""
+    return F.broadcast(
+        counts.where(size > F.lit(float(threshold)))
+        .orderBy(size.desc(), F.col(BLOCK_KEY).asc())
+        .limit(cfg.max_hot_keys)
+        .select(BLOCK_KEY, *[c.cast("int").alias(n) for n, c in shards.items()])
+    )
+
+
+def _members(
+    side: DataFrame, hot: DataFrame | None, own: str, other: str, cells: str
+) -> DataFrame:
+    """``side`` plus (__l, __t, __pos), one row per grid cell. ``own``
+    and ``other`` name the hot frame's shard counts of this side and
+    of the side it pairs with; rows of blocks missing from ``hot``
+    (cold, or salting off) have one shard."""
+    cols = side.columns
+    if hot is None:
+        tagged = side.select(*cols, F.lit(1).alias("__s"), F.lit(1).alias("__s_other"))
+    else:
+        # broadcast LEFT join of the bounded hot tail: left to its own
+        # estimates Catalyst plans an unfiltered counts join as an SMJ
+        # that re-shuffles the whole corpus by key (plan-verified)
+        tagged = side.join(hot, on=BLOCK_KEY, how="left").select(
+            *cols,
+            F.coalesce(F.col(own), F.lit(1)).alias("__s"),
+            F.coalesce(F.col(other), F.lit(1)).alias("__s_other"),
+        )
+    tagged = tagged.withColumn(
+        "__shard", F.pmod(F.xxhash64(F.col("idx")), F.col("__s")).cast("int")
+    )
+    return tagged.select(*cols, F.explode(F.expr(cells)).alias("__c")).select(
+        *cols,
+        F.col("__c.l").alias("__l"),
+        F.col("__c.t").alias("__t"),
+        F.col("__c.pos").alias("__pos"),
+    )
+
+
+def cell_members(
+    side_a: DataFrame, cfg: PairingConfig, side_b: DataFrame | None = None
+):
+    """Grid-cell memberships for grouped scoring, as ONE declarative
+    plan: which blocks are hot, how many shards each gets (the same
+    hot rules and Column shard counts as the join path above), and
+    which cells each row belongs to. Each keyed side (idx, BLOCK_KEY,
+    payload…) gains (__l, __t, __pos), one row per cell; a COLD row
+    contributes exactly ONE row, cell (0, 0) — the O(rows) traffic
+    guarantee of grouped scoring (pinned by tests/test_grouped.py).
+    Returns the dedup member frame, or the (A, B) member frames in
+    match mode.
+
+    Block sizes come from map-side partial aggregations (the shuffle
+    carries (key, count) rows, never the corpus) inside the same plan:
+    no driver action runs."""
+    n_parts = _n_parts(side_a, cfg)
+    hot = None
+    if side_b is None:
+        if cfg.salt_enabled:
+            n = F.col("__n")
+            wide = _wide_shard_cap(cfg, n_parts, grid=False)
+            hot = _hot_keys(
+                side_a.groupBy(BLOCK_KEY).agg(F.count(F.lit(1)).alias("__n")),
+                n, cfg.salt_threshold, cfg,
+                {"__s": _shard_count_expr(n, cfg, wide, base_floor=2)},
+            )
+        return _members(side_a, hot, "__s", "__s", _DEDUP_CELLS)
+    if cfg.salt_enabled:
+        ca = side_a.groupBy(BLOCK_KEY).agg(F.count(F.lit(1)).alias("__na"))
+        cb = side_b.groupBy(BLOCK_KEY).agg(F.count(F.lit(1)).alias("__nb"))
+        # hot iff the PAIR PRODUCT na·nb exceeds the budget, in double
+        # as in candidate_pairs (a degenerate key's long product can
+        # wrap negative under non-ANSI SQL)
+        prod = F.col("__na").cast("double") * F.col("__nb").cast("double")
+        wide = _wide_shard_cap(cfg, n_parts, grid=True)
+        sa, sb = _grid_shards_expr(
+            F.col("__na"), F.col("__nb"), cfg, wide, _cell_target(cfg, n_parts)
+        )
+        # a hot key must split SOMETHING; the guard stays in long (an
+        # int32 sa·sb would wrap for a degenerate mega-block)
+        sb = F.when(sa * sb < 2, F.lit(2).cast("long")).otherwise(sb)
+        hot = _hot_keys(
+            ca.join(cb, on=BLOCK_KEY), prod,
+            cfg.salt_threshold * cfg.rows_per_shard, cfg,
+            {"__sa": sa, "__sb": sb},
+        )
+    return (
+        _members(side_a, hot, "__sa", "__sb", _MATCH_CELLS[0]),
+        _members(side_b, hot, "__sb", "__sa", _MATCH_CELLS[1]),
+    )

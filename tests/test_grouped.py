@@ -338,15 +338,14 @@ def test_cold_rows_have_single_cell_membership(spark):
     traffic guarantee. The regression: greatest() skips NULLs, so a
     post-join shard computation gave every cold row __s=2 and doubled
     the corpus through the group exchange (review r5)."""
-    from datamatch_spark.grouped import _dedup_members
-    from datamatch_spark.pairing import keyed_side
+    from datamatch_spark.pairing import cell_members, keyed_side
 
     rows = [(i, "hot" if i < 120 else f"c{i % 9}", f"n{i}") for i in range(200)]
     df = spark.createDataFrame(rows, "row_key long, blk string, last string")
     side = keyed_side(df, ColumnsIndex("blk"), "row_key", ["last"], "idx", "rec")
     side = side.select("idx", "block_key", F.col("rec.last").alias("__f0"))
     cfg = PairingConfig(salt_threshold=50, rows_per_shard=30)
-    members = _dedup_members(side, ["__f0"], cfg)
+    members = cell_members(side, cfg)
     per_row = {
         r["idx"]: r["n"]
         for r in members.groupBy("idx").count().withColumnRenamed("count", "n").collect()
